@@ -66,7 +66,14 @@ def upsert_dim(
     ``model_curated.py:72-101``) becomes: stack old+new with a precedence
     flag, keep the highest-precedence row per key. The result is the new
     dim snapshot; persist it with ``sources.layers.overwrite_snapshot``.
+
+    ``incoming`` need not be deduplicated first: null keys are dropped
+    and ties among incoming rows break exactly as :func:`dedup_dim`'s
+    default does (non-key columns descending, nulls last), inside the
+    same window — one shuffle on the pk instead of two.
     """
+    incoming = incoming.na.drop(subset=list(pk))
+    tie_break = [F.col(c).desc_nulls_last() for c in incoming.columns if c not in pk]
     incoming = incoming.withColumn("__is_new", F.lit(1))
     if existing is None:
         stacked = incoming
@@ -74,7 +81,9 @@ def upsert_dim(
         stacked = incoming.unionByName(
             existing.withColumn("__is_new", F.lit(0)), allowMissingColumns=True
         )
-    w = Window.partitionBy(*[F.col(k) for k in pk]).orderBy(F.col("__is_new").desc())
+    w = Window.partitionBy(*[F.col(k) for k in pk]).orderBy(
+        F.col("__is_new").desc(), *tie_break
+    )
     return (
         stacked.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)

@@ -17,7 +17,9 @@ pipeline gate, a test oracle, and an ad-hoc query.
 Scale notes: each rollup aggregates before joining, so the join inputs are
 at key cardinality (small); AQE broadcasts them. The checks short-circuit
 with ``limit(1)`` for the raising wrappers — no full materialization of
-violations at 100 TB just to decide pass/fail.
+violations at 100 TB just to decide pass/fail. ``assert_fact_gates``
+decides both hard gates of a fact in one grain aggregation, for a
+pipeline that gates facts it has just written.
 """
 
 from __future__ import annotations
@@ -65,6 +67,46 @@ def assert_non_negative(df: DataFrame, measures: tuple[str, ...]) -> None:
 def assert_unique_grain(df: DataFrame, keys: tuple[str, ...]) -> None:
     if duplicate_keys(df, keys).limit(1).count() > 0:
         raise DataQualityError(f"duplicate rows at grain {keys}")
+
+
+def assert_fact_gates(
+    facts: Sequence[tuple[DataFrame, tuple[str, ...]]],
+    measures: tuple[str, ...],
+) -> list[int]:
+    """Both hard gates over ``(fact, grain keys)`` pairs in one
+    aggregation per fact; returns each fact's row count.
+
+    Each fact is grouped by its grain for the per-key row count and the
+    per-key minimum of every measure, and those fold into one row: the
+    total row count, the largest per-key count and each measure's
+    minimum. A minimum below 0 is a negative value (SQL ``min`` skips
+    nulls, as the ``< 0`` filter does); a per-key count above 1 is a
+    duplicate. The grain check has to read every row anyway, so the
+    non-negativity check and the row count ride on the same scan.
+
+    Raises the :func:`assert_non_negative` / :func:`assert_unique_grain`
+    errors in the order calling those on each fact in turn, all
+    non-negativity checks first, would raise them.
+    """
+    stats = []
+    for df, keys in facts:
+        per_key = df.groupBy(*[F.col(k) for k in keys]).agg(
+            F.count(F.lit(1)).alias("__n"), *[F.min(m).alias(m) for m in measures]
+        )
+        stats.append(
+            per_key.agg(
+                F.sum("__n").alias("__rows"),
+                F.max("__n").alias("__max_n"),
+                *[F.min(m).alias(m) for m in measures],
+            ).first()
+        )
+    for row in stats:
+        if any(row[m] is not None and row[m] < 0 for m in measures):
+            raise DataQualityError(f"negative values found in measures {measures}")
+    for (_df, keys), row in zip(facts, stats):
+        if (row["__max_n"] or 0) > 1:
+            raise DataQualityError(f"duplicate rows at grain {keys}")
+    return [row["__rows"] or 0 for row in stats]
 
 
 def _sum_measures(df: DataFrame, group_keys: list[str], measures: tuple[str, ...], prefix: str) -> DataFrame:

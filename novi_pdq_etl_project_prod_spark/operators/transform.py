@@ -13,8 +13,12 @@ Everything is a single lazy plan per table: Catalyst fuses the projections
 into one whole-stage-codegen stage over the scan, and the only shuffle is
 the final grain aggregation (partial/final HashAggregate with map-side
 combine). The reference runs count + write as two uncached executions of
-the same plan (SURVEY.md §3.2 step 4 vs 6); here diagnostics are separate
-optional functions so the hot path executes once.
+the same plan (SURVEY.md §3.2 step 4 vs 6). Here the plan executes once
+per month: ``plans.pipeline`` takes the staging row count from a
+``df.observe`` on the staging write itself, and the dims and facts read
+the written staging month back from its files rather than re-running
+the transform; diagnostics (``duplicate_groups``) are separate optional
+functions, off the hot path.
 """
 
 from __future__ import annotations

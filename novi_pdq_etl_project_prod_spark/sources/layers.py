@@ -29,6 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Upper bound on commit_tables' internal manifest-CAS retries: enough to
 #: absorb realistic co-located sink contention (retries cost ~1ms each —
@@ -423,6 +424,7 @@ def read_month(
     layer: MedallionLayer | str,
     table: str,
     yyyymm: int | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Partition-pruned month-slice read (S3).
 
@@ -433,10 +435,18 @@ def read_month(
     Segment-aware (ADVICE r10): append-shaped tables read as the union
     of their manifest segments — the per-table pointer alone would
     return only the newest increment.
+
+    ``schema``: the schema of the frame that wrote the table (partition
+    columns included, in any position), for a caller that just wrote
+    it. Spark then skips parquet schema inference, which costs one
+    footer-reading Spark job per read; the columns come back in the
+    inferred order (data columns, then partition columns).
     """
     dirs = _live_table_dirs(root, layer, table)
     reader = spark.read
-    if len(dirs) > 1:
+    if schema is not None:
+        reader = reader.schema(schema)
+    elif len(dirs) > 1:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(*dirs)
     if yyyymm is not None:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from novi_pdq_etl_project_prod_spark.session import get_spark
@@ -30,3 +32,19 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": str(wh)},
     )
     yield s
+
+
+def count_spark_jobs(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``, counted through a job
+    group on the calling thread. Waits for the listener bus first: the
+    status tracker learns of jobs asynchronously."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

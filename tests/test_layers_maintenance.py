@@ -9,10 +9,11 @@ from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.sources.layers import (
     compact_table,
+    read_month,
     resolve_table_path,
     write_month_idempotent,
 )
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, count_spark_jobs
 
 
 def _parquet_files(path):
@@ -793,3 +794,22 @@ def test_maybe_optimize_manifest_rewrites_segmented_table(spark, tmp_path):
         max_segments=100,
     )
     assert r2["optimize"]["mz"]["fired"] is False
+
+
+def test_read_month_with_written_schema_skips_inference(spark, tmp_path):
+    """Passing the writer's schema (partition column anywhere in it)
+    reads the same schema and rows as inference, and building the read
+    runs no Spark job."""
+    root = str(tmp_path / "wh")
+    df = spark.createDataFrame(
+        [(1, 202401, "a", 1.5), (2, 202402, None, None)],
+        "k int, yyyymm int, s string, m double",
+    ).withColumn("ts", F.current_timestamp())
+    write_month_idempotent(df, root, "staging", "t")
+    inferred = read_month(spark, root, "staging", "t", 202401)
+    given, jobs = count_spark_jobs(
+        spark, lambda: read_month(spark, root, "staging", "t", 202401, schema=df.schema)
+    )
+    assert jobs == 0
+    assert given.schema == inferred.schema
+    assert given.collect() == inferred.collect()

@@ -5,8 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.operators.modeling import (
+    dedup_dim,
     merge_into_snapshot,
     scd2_apply,
+    upsert_dim,
 )
 
 
@@ -364,3 +366,27 @@ def test_merge_frames_null_key_duplicates_allowed(spark):
     )
     with _pytest.raises(ValueError, match="multiple rows"):
         merge_frames(target, real_dups, on=("id",))
+
+
+def test_upsert_dim_dedups_incoming_like_dedup_dim(spark):
+    """upsert_dim over raw incoming rows == upsert_dim over dedup_dim's
+    survivors: null keys dropped, ties broken by the non-key columns
+    descending, nulls last — in both the first load and an update."""
+    incoming = _df(
+        spark,
+        [(1, "b", None), (1, "a", 9), (1, None, 9), (2, None, None),
+         (2, None, 3), (None, "z", 1), (3, "c", 1), (3, "c", 1)],
+        "k int, name string, v int",
+    )
+    existing = _df(spark, [(1, "old", 0), (4, "kept", 4)], "k int, name string, v int")
+    for base in (None, existing):
+        got = upsert_dim(base, incoming, pk=("k",)).collect()
+        want = upsert_dim(base, dedup_dim(incoming, pk=("k",)), pk=("k",)).collect()
+        assert sorted(got, key=lambda r: r.k) == sorted(want, key=lambda r: r.k)
+    rows = {r.k: r for r in upsert_dim(existing, incoming, pk=("k",)).collect()}
+    assert set(rows) == {1, 2, 3, 4}
+    assert (rows[1].name, rows[1].v) == ("b", None)  # name desc first
+    assert rows[2].v == 3  # non-null beats null
+    assert rows[4].name == "kept"
+    keys_only = _df(spark, [(5,), (5,), (None,)], "k int")
+    assert upsert_dim(None, keys_only, pk=("k",)).collect() == [(5,)]

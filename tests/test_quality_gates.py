@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from novi_pdq_etl_project_prod_spark.operators.quality import (
     DataQualityError,
+    assert_fact_gates,
     assert_non_negative,
     assert_unique_grain,
 )
@@ -31,6 +32,43 @@ def test_unique_grain_gate_raises_on_duplicates(spark):
     )
     with pytest.raises(DataQualityError, match="duplicate"):
         assert_unique_grain(bad, ("k", "yyyymm"))
+
+
+def _separate_gates(facts, measures):
+    """The outcome the one-pass gate must reproduce: the separate gates,
+    non-negativity on every fact first, then grain uniqueness."""
+    try:
+        for df, _keys in facts:
+            assert_non_negative(df, measures)
+        for df, keys in facts:
+            assert_unique_grain(df, keys)
+    except DataQualityError as e:
+        return str(e)
+    return [df.count() for df, _keys in facts]
+
+
+@pytest.mark.parametrize(
+    "rows_a, rows_b",
+    [
+        ([(1, 1.0, 2.0), (2, 0.0, None)], [(7, 3.0, 0.0)]),  # clean, null measure
+        ([(1, 1.0, -2.0), (2, 0.0, 0.0)], [(7, 3.0, 0.0)]),  # negative in a
+        ([(1, 1.0, 2.0), (1, 0.0, 0.0)], [(7, 3.0, 0.0)]),  # duplicate in a
+        ([(1, 1.0, 2.0), (1, 0.0, 0.0)], [(7, -3.0, 0.0)]),  # dup a, negative b
+        ([(None, 1.0, 2.0), (None, 0.0, 0.0)], []),  # null keys repeat; empty b
+        ([(1, float("nan"), 0.0)], [(7, 0.0, 0.0), (8, -0.0, 1.0)]),  # NaN, -0.0
+    ],
+)
+def test_fact_gates_match_the_separate_gates(spark, rows_a, rows_b):
+    schema = "k int, m1 double, m2 double"
+    facts = [
+        (spark.createDataFrame(rows_a, schema), ("k",)),
+        (spark.createDataFrame(rows_b, schema), ("k",)),
+    ]
+    try:
+        got = assert_fact_gates(facts, ("m1", "m2"))
+    except DataQualityError as e:
+        got = str(e)
+    assert got == _separate_gates(facts, ("m1", "m2"))
 
 
 def test_backfill_runs_month_list(spark, tmp_path):

@@ -18,7 +18,16 @@ import os
 
 import pytest
 
+from novi_pdq_etl_project_prod_spark.operators.quality import DataQualityError
+from novi_pdq_etl_project_prod_spark.plans import pipeline
 from novi_pdq_etl_project_prod_spark.plans.pipeline import run_monthly_pipeline
+from novi_pdq_etl_project_prod_spark.sources.layers import (
+    SnapshotConflictError,
+    current_snapshot,
+    overwrite_snapshot,
+    table_path,
+)
+from tests.conftest import count_spark_jobs
 
 OPERATOR_DSV = """\
  OPERATOR_NO }OPERATOR_NAME} CYCLE_YEAR }CYCLE_MONTH}CYCLE_YEAR_MONTH}OPER_OIL_PROD_VOL}OPER_GAS_PROD_VOL}OPER_COND_PROD_VOL}OPER_CSGD_PROD_VOL
@@ -114,3 +123,84 @@ def test_pipeline_second_month_preserves_first(spark, pipeline_env):
     months = {r.yyyymm for r in fact.select("yyyymm").distinct().collect()}
     assert months == {202401, 202402}
     assert fact.where("yyyymm = 202402").count() == 1  # operator 104 only
+
+
+def _env(tmp_path, operator_dsv=OPERATOR_DSV, lease_dsv=LEASE_DSV):
+    op, lease = tmp_path / "operator.dsv", tmp_path / "lease.dsv"
+    op.write_text(operator_dsv)
+    lease.write_text(lease_dsv)
+    return str(op), str(lease), str(tmp_path / "warehouse")
+
+
+def test_pipeline_gate_rejects_negative_measure(spark, tmp_path):
+    bad = OPERATOR_DSV.replace("}202401}10.5}", "}202401}-10.5}")
+    op, lease, root = _env(tmp_path, operator_dsv=bad)
+    with pytest.raises(DataQualityError, match="negative"):
+        run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+
+
+def test_pipeline_gate_rejects_duplicate_operator_month(spark, tmp_path):
+    # the operator file is taken at (operator, month) grain as delivered,
+    # so a second row for operator 101 in 202401 reaches the fact
+    dup = OPERATOR_DSV + "101}Alpha Oil}2024}1}202401}1.0}1.0}1.0}1.0\n"
+    op, lease, root = _env(tmp_path, operator_dsv=dup)
+    with pytest.raises(DataQualityError, match="duplicate"):
+        run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+
+
+def test_unreadable_dim_snapshot_fails_the_month(spark, tmp_path):
+    """A corrupt live dim snapshot must fail the month, not be taken for
+    an absent dim (which would commit a dim holding one month's rows)."""
+    op, lease, root = _env(tmp_path)
+    run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+    path = table_path(root, "curated", "dim_operator")
+    live = current_snapshot(path)
+    snap = os.path.join(path, live)
+    for name in os.listdir(snap):
+        if name.endswith(".parquet"):
+            with open(os.path.join(snap, name), "r+b") as fh:
+                fh.truncate(8)
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        run_monthly_pipeline(spark, op, lease, root, yyyymm=202402)
+    assert current_snapshot(path) == live
+
+
+def test_dim_commit_is_compare_and_swap(spark, tmp_path, monkeypatch):
+    """A dim committed by another writer between this month's read and
+    its commit fails the month with SnapshotConflictError; the other
+    writer's snapshot stays live."""
+    op, lease, root = _env(tmp_path)
+    run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+    real = pipeline.overwrite_snapshot
+    rival = {}
+
+    def racing_overwrite(df, root_, layer, table, expected_base=...):
+        if table == "dim_field" and not rival:
+            rival_rows = spark.createDataFrame([(99,)], "field_no int")
+            overwrite_snapshot(rival_rows, root_, layer, table)
+            rival["snap"] = current_snapshot(table_path(root_, layer, table))
+        return real(df, root_, layer, table, expected_base=expected_base)
+
+    monkeypatch.setattr(pipeline, "overwrite_snapshot", racing_overwrite)
+    with pytest.raises(SnapshotConflictError):
+        run_monthly_pipeline(spark, op, lease, root, yyyymm=202402)
+    assert current_snapshot(table_path(root, "curated", "dim_field")) == rival["snap"]
+
+
+@pytest.mark.fastverify
+def test_monthly_pipeline_job_budget(spark, tmp_path):
+    """The month's Spark jobs are its writes, the dim upserts' shuffles,
+    one gate aggregation per fact, the rollup check and, once the dims
+    exist, their snapshot reads: a re-added count, read-back or schema
+    inference shows up here (a fresh month ran 58 jobs before row counts
+    came from the writes, 28 after)."""
+    op, lease, root = _env(tmp_path)
+    first, n_first = count_spark_jobs(
+        spark, lambda: run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+    )
+    rerun, n_rerun = count_spark_jobs(
+        spark, lambda: run_monthly_pipeline(spark, op, lease, root, yyyymm=202401)
+    )
+    assert first == rerun
+    assert n_first <= 28
+    assert n_rerun <= 32
